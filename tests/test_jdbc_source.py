@@ -82,3 +82,14 @@ def test_edge_read_partitions_on_src_id(spark, jdbc_calls):
     assert len(preds) == 4
     assert all("hashtext(src_id)" in p and "% 4" in p for p in preds)
     assert {int(p.rsplit("= ", 1)[1]) for p in preds} == set(range(4))
+
+
+def test_table_opened_once_per_source(spark, jdbc_calls):
+    # every node_df/edge_df on one label reuses the first open: one
+    # partitioned jdbc read per table per source instance
+    src = JdbcGraphSource(spark, URL, clinic_dictionary(), num_partitions=4)
+    a = src.node_df("participant", props=(PropSpec("submitter_id"),))
+    b = src.node_df("participant", props=(PropSpec("project_id"),))
+    assert a.columns == ["_participant_id", "submitter_id"]
+    assert b.columns == ["_participant_id", "project_id"]
+    assert [c["table"] for c in jdbc_calls] == ["node_participant"]

@@ -37,11 +37,10 @@ mappings:
 """
 
 
-def test_cli_end_to_end(spark, props_json_dir, tmp_path):
-    import yaml
-
+def _cli_inputs(props_json_dir, tmp_path):
+    """(dictionary JSON file, graph dir) for ``run.main`` over the
+    clinic fixture graph."""
     from tests.conftest import clinic_dictionary
-    from tube_spark.run import main
 
     # the CLI needs the dictionary as {label: json_schema}; build it from
     # the fixture dictionary
@@ -62,9 +61,6 @@ def test_cli_end_to_end(spark, props_json_dir, tmp_path):
         schemas[label] = {"properties": props, "links": links}
     dict_file = tmp_path / "schemas.json"
     dict_file.write_text(json.dumps(schemas))
-    mapping_file = tmp_path / "etlMapping.yaml"
-    mapping_file.write_text(MAPPING_YAML)
-    out_dir = tmp_path / "indexes"
 
     # the dictionary built from json schemas derives edge table names from
     # link labels — regenerate the graph dir with those names
@@ -86,6 +82,16 @@ def test_cli_end_to_end(spark, props_json_dir, tmp_path):
     # json-schema path carries it in the schema dict
     schemas["sample"]["category"] = "data_file"
     dict_file.write_text(json.dumps(schemas))
+    return dict_file, graph2
+
+
+def test_cli_end_to_end(spark, props_json_dir, tmp_path):
+    from tube_spark.run import main
+
+    dict_file, graph2 = _cli_inputs(props_json_dir, tmp_path)
+    mapping_file = tmp_path / "etlMapping.yaml"
+    mapping_file.write_text(MAPPING_YAML)
+    out_dir = tmp_path / "indexes"
 
     rc = main(
         [
@@ -122,6 +128,59 @@ def test_cli_end_to_end(spark, props_json_dir, tmp_path):
     )
     assert rc2 == 0
     assert json.loads((out_dir / "participant_index.manifest.json").read_text())["current"] == 1
+
+
+JOINING_YAML = """
+mappings:
+  - name: participant_index
+    doc_type: participant
+    type: aggregator
+    root: participant
+    props:
+      - name: submitter_id
+      - name: join_key
+        src: id
+    joining_props:
+      - index: sample_index
+        join_on: join_key
+        props:
+          - {name: sample_types, src: sample_type, fn: set}
+  - name: sample_index
+    doc_type: sample
+    type: aggregator
+    root: sample
+    props:
+      - {name: sample_type}
+    parent_props:
+      - path: participants[join_key:id]
+"""
+
+
+def test_cli_releases_cached_indexes(spark, props_json_dir, tmp_path):
+    # Pipeline caches an index another index joins; once every index is
+    # published run.main must drop that cache, or a long-lived process
+    # keeps it and a later identical plan re-serves it
+    from tube_spark.run import main
+
+    dict_file, graph2 = _cli_inputs(props_json_dir, tmp_path)
+    mapping_file = tmp_path / "etlMapping.yaml"
+    mapping_file.write_text(JOINING_YAML)
+    out_dir = tmp_path / "indexes"
+    spark.catalog.clearCache()
+    rc = main(
+        [
+            "--mapping", str(mapping_file),
+            "--source-dir", str(graph2),
+            "--out-dir", str(out_dir),
+            "--dictionary", str(dict_file),
+            "--master", "local[4]",
+        ]
+    )
+    assert rc == 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    pdf = spark.read.parquet(str(out_dir / "participant_index_v1"))
+    rows = {r["submitter_id"]: sorted(r["sample_types"]) for r in pdf.collect()}
+    assert rows == {"A": ["Blood", "Saliva"], "B": ["Blood"]}
 
 
 def test_es_mapping_generation(spark):

@@ -102,7 +102,10 @@ def test_inplace_partfile_rewrite_invalidates(spark, tmp_path):
     # unchanged) must still re-infer: the signature folds in each
     # direct entry's (name, mtime_ns, size)
     p = str(tmp_path / "t.parquet")
-    spark.createDataFrame([Row(a=1)]).write.parquet(p)
+    # one part file per frame: under local[N] a one-row frame can write
+    # an empty part file next to the row's, and the byte swap below must
+    # hit the file Spark infers the schema from
+    spark.createDataFrame([Row(a=1)]).coalesce(1).write.parquet(p)
     # drop the local-FS .crc sidecars BEFORE the first read so the
     # in-place byte swap below cannot trip the checksum layer
     for f in os.listdir(p):
@@ -113,7 +116,7 @@ def test_inplace_partfile_rewrite_invalidates(spark, tmp_path):
         f for f in os.listdir(p) if f.endswith(".parquet") and not f.startswith(".")
     )
     tmp_out = str(tmp_path / "new.parquet")
-    spark.createDataFrame([Row(z="s")]).write.parquet(tmp_out)
+    spark.createDataFrame([Row(z="s")]).coalesce(1).write.parquet(tmp_out)
     new_part = next(
         f for f in os.listdir(tmp_out)
         if f.endswith(".parquet") and not f.startswith(".")

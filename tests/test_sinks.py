@@ -41,6 +41,32 @@ def test_versioned_publish_and_rollover(spark, tmp_path):
         assert json.load(f) == {"array": []}
 
 
+def test_publish_from_worker_thread(spark, tmp_path):
+    """The active session is thread-local; a publish from a worker
+    thread takes its session from the published frame."""
+    import threading
+
+    w = VersionedIndexWriter(str(tmp_path), "cust", keep_versions=1)
+    errors, counts = [], []
+
+    def publish():
+        try:
+            w.publish(spark.range(3), watermark="a")
+            w.publish(spark.range(4), watermark="b")  # prunes v1
+            counts.append(w.read_current(spark).count())
+        except Exception as e:  # reported on the test thread
+            errors.append(e)
+
+    t = threading.Thread(target=publish)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive()
+    assert not errors, errors
+    assert counts == [4]
+    assert w.manifest()["current"] == 2
+    assert not os.path.exists(os.path.join(str(tmp_path), "cust_v1"))
+
+
 def test_missing_manifest_with_versions_refuses_restart(spark, tmp_path):
     """ADVICE r5: a lost manifest next to existing version directories
     must not silently restart numbering at v1 over live data."""

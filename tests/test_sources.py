@@ -59,3 +59,104 @@ def test_json_prop_pruning(spark, props_json_dir):
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     # the from_json schema in the optimized plan carries a single field
     assert "consent_codes" not in plan and "consortium_id" not in plan
+
+
+# --- open once per source, schema inferred once per session ----------
+
+TWO_MAPPINGS = """
+mappings:
+  - name: participant_index
+    doc_type: participant
+    type: aggregator
+    root: participant
+    props:
+      - name: submitter_id
+    parent_props:
+      - path: centers[center_name:name].projects[project_code:code]
+    aggregated_props:
+      - {name: n_samples, path: samples, fn: count}
+      - {name: total_quantity, src: quantity, path: samples, fn: sum}
+    nested_props:
+      - name: visits_nested
+        path: visits
+        props: [{name: age_at_visit}]
+  - name: file_index
+    doc_type: file
+    type: collector
+    category: data_file
+    props:
+      - {name: submitter_id}
+    injecting_props:
+      participant:
+        props:
+          - {name: participant_id, src: id}
+"""
+
+
+def _job_ids(spark):
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def _pipeline(spark, base):
+    from tests.conftest import clinic_dictionary
+    from tube_spark.config.mapping import parse_mappings_yaml
+    from tube_spark.plans.translator import Pipeline
+
+    source = PropsJsonGraphSource(spark, base, clinic_dictionary())
+    return Pipeline(source, parse_mappings_yaml(TWO_MAPPINGS))
+
+
+def test_pipeline_opens_each_table_once(spark, props_json_dir, monkeypatch):
+    from collections import Counter
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    opened = Counter()
+    real = DataFrameReader.parquet
+
+    def counting(self, *paths, **kw):
+        opened.update(paths)
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    results = _pipeline(spark, props_json_dir).run()
+    assert set(results) == {"participant_index", "file_index"}
+    assert opened and max(opened.values()) == 1, opened
+    # the shared relations still plan and compute correctly
+    rows = {r["submitter_id"]: r for r in results["participant_index"].collect()}
+    assert rows["A"]["n_samples"] == 2 and rows["A"]["total_quantity"] == 3.5
+    assert rows["B"]["center_name"] == "Center A"
+    files = {r["_doc_id"]: r["participant_id"] for r in results["file_index"].collect()}
+    assert files == {"samp1": "partA", "samp2": "partA", "samp3": "partB"}
+
+
+def test_fresh_source_plans_without_jobs(spark, props_json_dir):
+    # the first source infers each table's schema; a fresh source in the
+    # same session replays it, so planning submits no Spark job at all
+    _pipeline(spark, props_json_dir).run()
+    before = _job_ids(spark)
+    results = _pipeline(spark, props_json_dir).run()
+    assert _job_ids(spark) == before, "planning on a warm session submitted a job"
+    assert results["participant_index"].count() == 2
+
+
+def test_rewritten_table_read_fresh(spark, props_json_dir, tmp_path):
+    import shutil
+
+    base = tmp_path / "graph"
+    shutil.copytree(props_json_dir, base)
+    first = _pipeline(spark, str(base)).run()["participant_index"]
+    assert sorted(r["submitter_id"] for r in first.collect()) == ["A", "B"]
+
+    from tests.conftest import NODES
+
+    rows = [*NODES["participant"], ("partC", {"submitter_id": "C"})]
+    spark.createDataFrame(
+        [("2024-01-01", "{}", "{}", json.dumps(props), nid) for nid, props in rows],
+        "created string, acl string, _sysan string, _props string, node_id string",
+    ).coalesce(1).write.mode("overwrite").parquet(str(base / "node_participant"))
+
+    second = _pipeline(spark, str(base)).run()["participant_index"]
+    docs = {r["submitter_id"]: r for r in second.collect()}
+    assert sorted(docs) == ["A", "B", "C"]
+    assert docs["C"]["n_samples"] == 0

@@ -20,7 +20,7 @@ discover category leaves → per-leaf scan + ancestor-prop injection →
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -315,10 +315,15 @@ def build_translator(source: GraphSource, mapping: Mapping):
 class Pipeline:
     """Multi-index orchestration incl. phase-2 cross-index joins
     (reference ``interpreter.py:34-55``).  Phase-1 results are reused
-    in-memory (lineage), not round-tripped through Parquet."""
+    in-memory (lineage), not round-tripped through Parquet.
+
+    ``run`` caches every index another index joins; call ``release``
+    once the results are published so a long-lived process does not
+    keep (or, on an identical later plan, re-serve) that cache."""
 
     source: GraphSource
     mappings: list[Mapping]
+    cached: list[DataFrame] = field(default_factory=list, init=False, repr=False)
 
     def run(self) -> dict[str, DataFrame]:
         phase1 = {m.name: build_translator(self.source, m).translate() for m in self.mappings}
@@ -331,6 +336,7 @@ class Pipeline:
         for name in referenced:
             if name in phase1:
                 phase1[name] = phase1[name].cache()
+                self.cached.append(phase1[name])
         out: dict[str, DataFrame] = {}
         for m in self.mappings:
             df = phase1[m.name]
@@ -341,6 +347,12 @@ class Pipeline:
                 df = _join_index(df, other, jp)
             out[m.name] = df
         return out
+
+    def release(self) -> None:
+        """Unpersist what ``run`` cached."""
+        for df in self.cached:
+            df.unpersist()
+        self.cached.clear()
 
 
 def _join_index(df: DataFrame, other: DataFrame, jp) -> DataFrame:

@@ -126,15 +126,19 @@ def main(argv: list[str] | None = None) -> int:
         print("all indexes fresh — nothing to do")
         return 0
 
-    results = Pipeline(source, stale).run()
-    for name, df in results.items():
-        if args.sink == "file":
-            path = writers[name].publish(df, watermark=args.watermark)
-        else:
-            from tube_spark.sinks.es_mapping import es_mapping
+    pipeline = Pipeline(source, stale)
+    try:
+        results = pipeline.run()
+        for name, df in results.items():
+            if args.sink == "file":
+                path = writers[name].publish(df, watermark=args.watermark)
+            else:
+                from tube_spark.sinks.es_mapping import es_mapping
 
-            path = writers[name].write(df, mapping=es_mapping(df)["mappings"])
-        print(f"published {name} -> {path}")
+                path = writers[name].write(df, mapping=es_mapping(df)["mappings"])
+            print(f"published {name} -> {path}")
+    finally:
+        pipeline.release()
     return 0
 
 

@@ -36,8 +36,10 @@ from pyspark.sql import types as T
 from tube_spark.functions import fsio
 
 
-def _active_spark() -> SparkSession:
-    spark = SparkSession.getActiveSession()
+def _active_spark(spark: SparkSession | None = None) -> SparkSession:
+    """``spark`` when given, else the calling thread's active session
+    (``getActiveSession`` is thread-local: a worker thread has none)."""
+    spark = spark or SparkSession.getActiveSession()
     if spark is None:
         raise RuntimeError(
             "versioned publish needs an active SparkSession (manifest I/O "
@@ -129,8 +131,8 @@ class VersionedIndexWriter:
     def _manifest_path(self) -> str:
         return fsio.join(self.base_dir, f"{self.index}.manifest.json")
 
-    def manifest(self) -> dict:
-        spark = _active_spark()
+    def manifest(self, spark: SparkSession | None = None) -> dict:
+        spark = _active_spark(spark)
         if fsio.exists(spark, self._manifest_path):
             return json.loads(fsio.read_text(spark, self._manifest_path))
         # A missing manifest alongside existing version directories means
@@ -151,14 +153,13 @@ class VersionedIndexWriter:
             )
         return {"index": self.index, "current": None, "versions": []}
 
-    def _write_manifest(self, m: dict) -> None:
+    def _write_manifest(self, m: dict, spark: SparkSession) -> None:
         # fsio.write_text is the tmp+rename atomic alias swap
-        spark = _active_spark()
         fsio.mkdirs(spark, self.base_dir)
         fsio.write_text(spark, self._manifest_path, json.dumps(m))
 
-    def current_path(self) -> str | None:
-        m = self.manifest()
+    def current_path(self, spark: SparkSession | None = None) -> str | None:
+        m = self.manifest(spark)
         if m["current"] is None:
             return None
         return fsio.join(self.base_dir, f"{self.index}_v{m['current']}")
@@ -174,11 +175,11 @@ class VersionedIndexWriter:
         ``<index>_v<N>`` via ``bucketBy`` and repoints a catalog view
         ``<index>_current`` at it — zero-downtime alias semantics with
         co-located join capability for downstream consumers."""
-        m = self.manifest()
+        spark = df.sparkSession
+        m = self.manifest(spark)
         version = (m["versions"][-1]["version"] + 1) if m["versions"] else 1
         table = f"{self.index}_v{version}"
         BucketedTableSink(table, bucket_cols, n_buckets, self.format).write(df)
-        spark = df.sparkSession
         spark.sql(
             f"CREATE OR REPLACE VIEW {self.index}_current AS SELECT * FROM {table}"
         )
@@ -187,23 +188,27 @@ class VersionedIndexWriter:
              "bucketed_on": list(bucket_cols)}
         )
         m["current"] = version
-        self._write_manifest(m)
+        self._write_manifest(m, spark)
         # prune stale table versions beyond keep_versions
         for v in m["versions"][: -self.keep_versions]:
             spark.sql(f"DROP TABLE IF EXISTS {self.index}_v{v['version']}")
         m["versions"] = m["versions"][-self.keep_versions:]
-        self._write_manifest(m)
+        self._write_manifest(m, spark)
         return table
 
     def publish(self, df: DataFrame, watermark: str | None = None) -> str:
-        """Write a new version, then atomically repoint the alias."""
-        m = self.manifest()
+        """Write a new version, then atomically repoint the alias.
+
+        Manifest I/O uses ``df``'s session, so a publish from a worker
+        thread (which has no active session) works too."""
+        spark = df.sparkSession
+        m = self.manifest(spark)
         version = (m["versions"][-1]["version"] + 1) if m["versions"] else 1
         path = fsio.join(self.base_dir, f"{self.index}_v{version}")
         df.write.mode("overwrite").format(self.format).save(path)
 
         fsio.write_text(
-            df.sparkSession,
+            spark,
             fsio.join(path, "_array_config.json"),
             json.dumps(array_config(df)),
         )
@@ -212,18 +217,17 @@ class VersionedIndexWriter:
             {"version": version, "watermark": watermark, "published_at": time.time()}
         )
         m["current"] = version
-        self._write_manifest(m)  # atomic alias swap
-        self._prune(m)
+        self._write_manifest(m, spark)  # atomic alias swap
+        self._prune(m, spark)
         return path
 
     def read_current(self, spark: SparkSession) -> DataFrame:
-        path = self.current_path()
+        path = self.current_path(spark)
         if path is None:
             raise FileNotFoundError(f"index {self.index} has no published version")
         return spark.read.format(self.format).load(path)
 
-    def _prune(self, m: dict) -> None:
-        spark = _active_spark()
+    def _prune(self, m: dict, spark: SparkSession) -> None:
         stale = m["versions"][: -self.keep_versions]
         m["versions"] = m["versions"][-self.keep_versions:]
         for v in stale:
@@ -231,7 +235,7 @@ class VersionedIndexWriter:
             if fsio.exists(spark, p):
                 fs, jp, _ = fsio._fs(spark, p)
                 fs.delete(jp, True)
-        self._write_manifest(m)
+        self._write_manifest(m, spark)
 
 
 def freshness_check(writer: VersionedIndexWriter, source_watermark: str | None) -> bool:

@@ -19,6 +19,25 @@ Missing table ⇒ correctly-typed empty DataFrame (the reference's
 "zero-frame" synthesis, ``base/translator.py:94-98,195-212``) so
 downstream joins/aggs compile without ``isEmpty()`` job-triggering
 checks.
+
+Open once: a source instance resolves each physical table name once
+and opens each table once; every later ``node_df``/``edge_df`` on it
+builds its projection over the same reader, so the many requests one
+ETL run makes for a table (a mapping set typically asks for each table
+two or three times) cost one open, and Catalyst sees one relation
+where a table feeds several branches.
+Parquet opens go through ``functions.pqread.read_parquet``, which keeps
+the inferred schema per (session, path, file signature): a later
+source in the same session opens the table without the footer-inference
+job a bare ``spark.read.parquet`` submits.
+
+Staleness contract: an instance is a snapshot for ONE run.  The frames
+it memoizes carry the file listing taken when the table was opened, so
+build a new source for every run over inputs that may change
+(``tube_spark.run.main`` does); a new source re-resolves every table,
+and the schema cache re-infers any table whose file signature moved (a
+rewritten, added or removed part file).  Paths the schema cache cannot
+stat locally (object stores, relative paths) get the stock read.
 """
 
 from __future__ import annotations
@@ -32,6 +51,7 @@ from pyspark.sql import types as T
 from tube_spark.config.mapping import PropSpec
 from tube_spark.dictionary import Dictionary
 from tube_spark.functions import fsio
+from tube_spark.functions.pqread import read_parquet
 from tube_spark.functions.valuemap import value_map_col
 
 
@@ -128,8 +148,15 @@ class PropsJsonGraphSource:
         self.legacy_bool_as_string = legacy_bool_as_string
         self.fmt = fmt
         self.edge_overrides = edge_overrides or {}
+        self._paths: dict[str, str | None] = {}
+        self._frames: dict[str, DataFrame] = {}
 
     def _table_path(self, table: str) -> str | None:
+        if table not in self._paths:
+            self._paths[table] = self._resolve(table)
+        return self._paths[table]
+
+    def _resolve(self, table: str) -> str | None:
         # psqlgraph strips underscores from the LABEL part of physical
         # table names (node_ct_series_file → node_ctseriesfile)
         prefix, _, label = table.partition("_")
@@ -141,6 +168,15 @@ class PropsJsonGraphSource:
         return None
 
     def _read(self, path: str, csv_schema: str) -> DataFrame:
+        """The table at ``path``, opened on first use and reused after
+        (two threads racing on a first use may both open it; every
+        caller still gets the one frame that was stored)."""
+        df = self._frames.get(path)
+        if df is None:
+            df = self._frames.setdefault(path, self._open(path, csv_schema))
+        return df
+
+    def _open(self, path: str, csv_schema: str) -> DataFrame:
         if self.fmt == "csv" or path.endswith(".csv"):
             # Sqoop/psql CSV quoting doubles embedded quotes ("" inside a
             # quoted field) — escape must be '"', not the backslash default
@@ -150,7 +186,7 @@ class PropsJsonGraphSource:
                 .option("escape", '"')
                 .csv(path)
             )
-        return self.spark.read.parquet(path)
+        return read_parquet(self.spark, path)
 
     def node_df(self, label: str, props: tuple[PropSpec, ...] = ()) -> DataFrame:
         wanted = sorted({p.source for p in props if p.source != "id"})
@@ -207,6 +243,7 @@ class JdbcGraphSource(PropsJsonGraphSource):
     classes) are pinned by ``tests/test_jdbc_source.py`` against an
     intercepted ``spark.read.jdbc``; the query shapes above the read are
     the same as the file-based source, covered by the Parquet/CSV tests.
+    Like the file-based source, an instance opens each table once.
     """
 
     def __init__(
@@ -227,11 +264,12 @@ class JdbcGraphSource(PropsJsonGraphSource):
         self.legacy_bool_as_string = legacy_bool_as_string
         self.fmt = "jdbc"
         self.edge_overrides = edge_overrides or {}
+        self._frames: dict[str, DataFrame] = {}
 
     def _table_path(self, table: str) -> str | None:
         return table  # existence resolved by the database
 
-    def _read(self, table: str, csv_schema: str) -> DataFrame:
+    def _open(self, table: str, csv_schema: str) -> DataFrame:
         # hash-partition on the id column so executors read in parallel;
         # predicates push down to Postgres as WHERE clauses
         id_column = "src_id" if table.startswith("edge_") else "node_id"
